@@ -16,6 +16,7 @@ oracle-differential hash checks (SURVEY.md §5, "float associativity").
 
 from __future__ import annotations
 
+import json
 from collections.abc import Sequence
 
 from pyspark.sql import Column
@@ -28,8 +29,19 @@ def _dbl(col: Column | str) -> Column:
 
 
 def vector_lit(vec: Sequence[float]) -> Column:
-    """A literal array<double> column from a Python vector."""
-    return F.array(*[F.lit(float(v)) for v in vec])
+    """A literal array<double> column from a Python vector.
+
+    One expression, ``from_json`` over a JSON string literal, so that
+    building it is one JVM call, not one ``F.lit`` call per dimension
+    (384 for the store's vectors) each time a probe, centroid or
+    hyperplane is planned. The optimizer constant-folds the parse: the
+    physical plan holds a literal array. Python's ``repr`` of a float
+    is its shortest round-tripping decimal and Jackson parses it
+    correctly rounded, so every double — -0.0, subnormals, the finite
+    extremes — arrives bit-identical; NaN and ±inf travel as JSON's
+    non-numeric tokens, which ``from_json`` accepts by default. An empty
+    vector still types as ``array<double>``."""
+    return F.from_json(F.lit(json.dumps([float(v) for v in vec])), "array<double>")
 
 
 def dot(a: Column | str, b: Column | str) -> Column:

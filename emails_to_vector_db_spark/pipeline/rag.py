@@ -11,9 +11,8 @@ Reference lifecycle being re-expressed (``rag.py:169-198``; SURVEY.md §3.1):
   the same interface and stays outside the correctness-checked surface.
 - intent routing (``rag.py:187-191``): {product_search, mixed} → vector
   retrieval; else a canned advisory context.
-- context assembly (``rag.py:189``): ``"\\n\\n".join(documents)`` →
-  ``concat_ws`` over a distance-ordered ``collect_list`` (A2) — order
-  preserved by sorting on (distance, id) before aggregation.
+- context assembly (``rag.py:189``): ``"\\n\\n".join(documents)`` over
+  the collected top-k rows (A2), ordered on (distance, id) on the driver.
 - ``call_openrouter_llm`` (``rag.py:126-166``): generation with fallback
   string ``"LLM call failed."`` (``rag.py:166``) — optional, gated, never
   imported in tests.
@@ -21,6 +20,7 @@ Reference lifecycle being re-expressed (``rag.py:169-198``; SURVEY.md §3.1):
 
 from __future__ import annotations
 
+import math
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
@@ -85,28 +85,28 @@ def assemble_context(
     """A2: fold retrieved documents into one LLM context string, preserving
     ascending-distance order (``"\\n\\n".join`` at ``rag.py:189``).
 
-    Order discipline: ``collect_list`` after a global aggregate does NOT
-    preserve any upstream ``orderBy`` across partitions, so the structs are
-    collected unordered and sorted INSIDE the row with ``array_sort`` on
-    (distance, id) — the same safe pattern as
-    ``plans/textops.py::context_assembly_per_source``."""
-    ordered = F.array_sort(
-        F.collect_list(
-            F.struct(
-                F.col(dist_col).alias("d"),
-                F.col(id_col).alias("i"),
-                F.col(content_col).alias("c"),
-            )
-        )
-    )
-    row = (
-        hits.agg(
-            F.concat_ws(
-                "\n\n", F.transform(ordered, lambda s: s.getField("c"))
-            ).alias("ctx")
-        ).collect()[0]
-    )
-    return row.ctx
+    Order discipline: ``hits`` is a top-k (``knn_topk`` plans
+    ``TakeOrderedAndProject``), so its k rows are collected in the
+    top-k's own job and joined on the driver; a global aggregate would
+    add a shuffle stage just to gather k rows. Collection order is not
+    trusted: rows are sorted on (distance, id, content) in Spark's
+    ascending order — the order ``array_sort`` gives those structs:
+    nulls first, NaN after +inf, -0.0 equal to 0.0. Null contents are
+    skipped, as ``concat_ws`` skips them; no hits give ``""``."""
+    rows = hits.select(dist_col, id_col, content_col).collect()
+    rows.sort(key=lambda r: tuple(_spark_order(v) for v in r))
+    return "\n\n".join(r[2] for r in rows if r[2] is not None)
+
+
+def _spark_order(v) -> tuple:
+    """Sort key of one value under Spark's ascending order: null before
+    everything, NaN after every other double (and equal to itself),
+    -0.0 equal to 0.0 (Python's ``==`` already agrees on the last)."""
+    if v is None:
+        return (0,)
+    if isinstance(v, float) and math.isnan(v):
+        return (2,)
+    return (1, v)
 
 
 ADVISORY_CONTEXT = (

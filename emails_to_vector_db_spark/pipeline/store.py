@@ -10,6 +10,19 @@ Reference behavior replaced:
   the existing store on id first (SURVEY.md J4) — idempotent re-runs.
 - ``rag.py:65-90``  KNN search → operators.knn.knn_topk on the store.
 
+Read path: every reader — the live view, a retained snapshot, the
+tombstone table, and the write path's ``exists()``/``delete()``/dedup
+reads — gets the store schema explicitly (``spark.read.schema(...)``).
+Parquet schema inference is a Spark job per read (a footer-reading
+task), which on an interactive search turn cost more than the search's
+own planning. The schema is resolved ONCE per data directory and pinned
+on the store object; the tombstone table's schema is the live id field
+(``delete()`` casts tombstones to it). A compaction's pointer flip moves
+the live data to a new directory, so the next read resolves the schema
+again there. What is NOT cached is the file listing: every read still
+lists the live directory on the driver, so files appended since the last
+read (by this store object or any other writer) are always visible.
+
 Scale notes: the anti-join's build side is the EXISTING store projected to
 its id column only — Catalyst broadcasts it while the id set is small and
 falls back to a shuffled sort-merge anti join once it isn't (Spark cannot
@@ -24,8 +37,10 @@ from __future__ import annotations
 import os
 import shutil
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from emails_to_vector_db_spark.operators.knn import knn_topk
 from emails_to_vector_db_spark.pipeline.embedder import Embedder
@@ -49,6 +64,8 @@ class EmbeddingStore:
         self.spark = spark
         self.path = path
         self.id_col = id_col
+        # (data directory, its schema): see the module docstring
+        self._pinned: tuple[str, StructType] | None = None
 
     def _pointer(self) -> str:
         return os.path.join(self.path, "_LATEST")
@@ -60,12 +77,27 @@ class EmbeddingStore:
                 return os.path.join(self.path, fh.read().strip())
         return self.path
 
+    def _schema(self) -> StructType | None:
+        """The live data's schema, inferred once per data directory;
+        None while nothing has been written (not cached — the next
+        append creates the store)."""
+        d = self._data_dir()
+        if self._pinned is None or self._pinned[0] != d:
+            try:
+                schema = self.spark.read.parquet(d).schema
+            except AnalysisException:
+                return None
+            self._pinned = (d, schema)
+        return self._pinned[1]
+
+    def _reader(self):
+        """``spark.read`` with the pinned schema; without live data, the
+        plain reader, so a read raises Spark's own path error."""
+        schema = self._schema()
+        return self.spark.read if schema is None else self.spark.read.schema(schema)
+
     def exists(self) -> bool:
-        try:
-            self.spark.read.parquet(self._data_dir()).schema
-            return True
-        except Exception:
-            return False
+        return self._schema() is not None
 
     def _tombstone_dir(self) -> str:
         return os.path.join(self.path, "_tombstones")
@@ -76,7 +108,10 @@ class EmbeddingStore:
             f.endswith(".parquet") for f in os.listdir(d)
         ):
             return None
-        return self.spark.read.parquet(d)
+        # delete() writes tombstones only once live data exists, cast
+        # to the live id type: their schema is the live id field
+        schema = StructType([self._schema()[self.id_col]])
+        return self.spark.read.schema(schema).parquet(d)
 
     def _manifest_dir(self) -> str:
         return os.path.join(self.path, "_manifests")
@@ -127,8 +162,8 @@ class EmbeddingStore:
                     for line in fh
                     if line.strip()
                 ]
-            return self.spark.read.parquet(*files)
-        df = self.spark.read.parquet(self._data_dir())
+            return self._reader().parquet(*files)
+        df = self._reader().parquet(self._data_dir())
         ts = self._tombstones()
         if ts is not None:
             # logical deletion: tombstoned ids are filtered at read time
@@ -146,20 +181,19 @@ class EmbeddingStore:
         deletes in force."""
         if not ids:
             return 0
-        if not self.exists():
+        schema = self._schema()
+        if schema is None:
             # nothing has ever been written: there is no live id type
             # to cast against and nothing the tombstones could delete —
             # an explicit no-op beats the opaque path-does-not-exist
-            # AnalysisException the parquet read below would raise
+            # AnalysisException a parquet read would raise
             return 0
         # the tombstone schema must match the LIVE id column type —
         # inferring it from ids[0] lets an int list against a
         # string-keyed store write a long-typed tombstone whose
         # anti-join silently casts (or breaks parquet schema merge
         # against an earlier string-typed tombstone file)
-        id_type = dict(self.spark.read.parquet(self._data_dir()).dtypes)[
-            self.id_col
-        ]
+        id_type = schema[self.id_col].dataType.simpleString()
         df = self.spark.createDataFrame(
             [(str(i),) for i in ids], f"{self.id_col} string"
         ).select(F.col(self.id_col).cast(id_type))

@@ -35,7 +35,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from emails_to_vector_db_spark.plans.registry import register
-from emails_to_vector_db_spark.sources.tables import load_table, table_path
+from emails_to_vector_db_spark.sources.tables import (
+    ident_part,
+    load_table,
+    table_path,
+)
 
 BUCKETS = 16
 _LAYOUT_VERSION = 1
@@ -50,8 +54,7 @@ def _bucket_root(sf_dir: str, tbl: str) -> str:
 
 
 def _table_name(sf_dir: str, tbl: str) -> str:
-    sf = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    return f"bkt_{tbl}_{sf}"
+    return f"bkt_{tbl}_{ident_part(sf_dir)}"
 
 
 def ensure_bucketed_table(

@@ -89,6 +89,7 @@ from emails_to_vector_db_spark.plans.retrieval import (
 )
 from emails_to_vector_db_spark.sources.tables import (
     corpus_tag,
+    ident_part,
     load_table,
     table_path,
 )
@@ -112,8 +113,7 @@ def _pst_root(sf_dir: str) -> str:
 
 
 def _pst_table_name(sf_dir: str) -> str:
-    sf = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    return f"pst_documents_{sf}_{corpus_tag(sf_dir)}"
+    return f"pst_documents_{ident_part(sf_dir)}_{corpus_tag(sf_dir)}"
 
 
 def _marker_fresh(marker: str, src: str) -> bool:
@@ -1136,8 +1136,7 @@ def ensure_positional_index(spark: SparkSession, sf_dir: str) -> str:
     spark.conf.set(
         "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false"
     )
-    sf = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    name = f"pstpos_documents_{sf}_{corpus_tag(sf_dir)}"
+    name = f"pstpos_documents_{ident_part(sf_dir)}_{corpus_tag(sf_dir)}"
     path = os.path.join(_pos_root(sf_dir), "positions")
     marker = os.path.join(_pos_root(sf_dir), "_SOURCE_MTIME")
     src = table_path(sf_dir, "documents")

@@ -8,6 +8,9 @@ pushdown make the manual projection unnecessary; Catalyst prunes at the scan.
 
 from __future__ import annotations
 
+import os
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,6 +46,16 @@ def corpus_tag(sf_dir: str) -> str:
     return hashlib.sha1(
         os.path.abspath(sf_dir).encode("utf-8")
     ).hexdigest()[:10]
+
+
+def ident_part(sf_dir: str) -> str:
+    """A corpus directory's basename as a catalog-identifier fragment:
+    every character outside ``[0-9A-Za-z_]`` becomes ``_`` (``sf0.01``
+    → ``sf0_01``, ``sf-x`` → ``sf_x``), so a derived table name like
+    ``pst_documents_<part>_<tag>`` parses unquoted. Distinct basenames
+    can share a fragment; a name that must tell corpora apart also
+    carries ``corpus_tag``."""
+    return re.sub(r"[^0-9A-Za-z_]", "_", os.path.basename(sf_dir.rstrip("/")))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

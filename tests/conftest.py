@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import math
+import os
 
 import duckdb
 import pytest
@@ -10,6 +11,22 @@ from emails_to_vector_db_spark.sources.tables import TABLE_NAMES, table_path
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
+
+
+def pytest_configure(config):
+    """Default the suite's driver heap to half the machine's memory.
+    ``get_spark`` falls back to a 48g heap, which on a smaller machine
+    lets the JVM grow until the kernel kills it mid-suite; an explicit
+    ``SPARK_GRAFT_DRIVER_MEM`` still wins. Set in the environment, so
+    subprocesses the tests spawn inherit it too."""
+    if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
+        return
+    try:
+        with open("/proc/meminfo") as fh:
+            kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return  # no /proc: keep get_spark's default
+    os.environ["SPARK_GRAFT_DRIVER_MEM"] = f"{kb // 2048}m"
 
 
 @pytest.fixture(scope="session")

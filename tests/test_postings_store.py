@@ -442,3 +442,44 @@ def test_drift_plan_actions_flip_with_append_vocabulary(spark, tmp_path):
         [(i, "alpha beta gamma") for i in range(60)] + [(1001, "alpha")],
     )
     assert actions(sparse) == {"keep"}
+
+
+def test_table_names_are_identifiers_for_any_dir_basename(spark, tmp_path):
+    """Derived catalog names replace every non-identifier character of
+    the corpus directory's basename (not only ``.``): a corpus in
+    ``sf-x.1`` must build and serve its postings and positional tables
+    under names that parse unquoted. ``sf0.01`` keeps its old name."""
+    import re
+
+    from emails_to_vector_db_spark.plans.bucketed import _table_name
+    from emails_to_vector_db_spark.plans.postings import (
+        _pos_root,
+        ensure_positional_index,
+    )
+    from emails_to_vector_db_spark.sources.tables import corpus_tag, ident_part
+
+    assert ident_part("/data/sf0.01/") == "sf0_01"
+    assert ident_part("/data/sf-x 2.é") == "sf_x_2__"
+    assert _table_name("/data/my-corpus", "orders") == "bkt_orders_my_corpus"
+    assert _pst_table_name("/data/sf0.01") == (
+        f"pst_documents_sf0_01_{corpus_tag('/data/sf0.01')}"
+    )
+
+    sf_dir = str(tmp_path / "sf-x.1")
+    os.makedirs(sf_dir)
+    shutil.copy(
+        os.path.join(SF_SMOKE, "documents.parquet"),
+        os.path.join(sf_dir, "documents.parquet"),
+    )
+    built = []
+    try:
+        built.append(ensure_postings_index(spark, sf_dir)[0])
+        built.append(ensure_positional_index(spark, sf_dir))
+        for t in built:
+            assert re.fullmatch(r"[A-Za-z_][0-9A-Za-z_]*", t), t
+            assert spark.sql(f"SELECT count(*) AS n FROM {t}").first().n > 0
+    finally:
+        for t in built:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        shutil.rmtree(_pst_root(sf_dir), ignore_errors=True)
+        shutil.rmtree(_pos_root(sf_dir), ignore_errors=True)
